@@ -30,9 +30,10 @@ object SparkEntry {
       // (st_geomfromwkt/makevalid/buffer/union_agg/intersection/area).
       "q_geo_flagship" -> ((s, dir) => Pipelines.flagship(s, dir, to5880 = false)),
       // F6 st_transform: same pipeline measured in EPSG:5880 m², emitted
-      // through the phased 100 m² bucket so the polyconic chain is
-      // hash-checked against a DuckDB replay of the projection math
-      // (Pipelines.flagship5880OracleSql; margins spec-asserted).
+      // through the phased 1000 m² bucket (Pipelines.Bucket5880Size) so
+      // the polyconic chain is hash-checked against a DuckDB replay of the
+      // projection math (Pipelines.flagship5880OracleSql; margins
+      // spec-asserted).
       "q_geo_flagship_5880" -> (Pipelines.flagship5880Bucketed _),
       // Broadcast R-tree st_intersects join (SURVEY §2.3 stretch op).
       "q_spatial_join" -> (Pipelines.spatialJoinRollup _),

@@ -17,8 +17,14 @@ import org.locationtech.jts.geom.Geometry
   * reduce side. The buffer is compacted (pre-unioned) whenever it exceeds
   * [[StUnionAgg.CompactAt]] elements, so per-group memory stays bounded on
   * skewed groups — the 100 TB scale path (union is associative, so eager
-  * partial unions preserve semantics; JTS `UnaryUnionOp` internally uses
-  * cascaded union for polygons).
+  * partial unions preserve semantics).
+  *
+  * Every union goes through [[graft.geom.Geom.unionAll]]: polygonal
+  * buffers are split into envelope-connected components, exact duplicates
+  * drop out, lone parts pass through, and only components of several
+  * parts are overlaid (JTS cascaded union); any non-polygonal member
+  * sends the whole buffer through JTS `UnaryUnionOp`. Like JTS overlay,
+  * it expects valid polygonal input.
   */
 case class StUnionAgg(
     child: Expression,

@@ -138,8 +138,113 @@ object Geom {
   def safeSymDifference(a: Geometry, b: Geometry): Geometry =
     safeOverlay(a, b)(_.symDifference(_))
 
-  /** Union of many geometries (UnaryUnionOp = cascaded union for polygons). */
+  /** Union of many geometries.
+    *
+    * Polygonal input (Polygons and MultiPolygons only) is split into its
+    * non-empty Polygon parts, and the parts are grouped into connected
+    * components, two parts connecting when their CLOSED envelopes
+    * intersect. Parts in different components cannot even touch, so the
+    * union is the MultiPolygon of the per-component unions, and only
+    * components of two or more distinct parts (after dropping `equalsExact`
+    * duplicates) pay for overlay (`UnaryUnionOp`, cascaded union); a
+    * lone part passes through as is. Sparse input — the flagship's groups
+    * of pairwise-disjoint parcels — thus costs an O(n log n) envelope
+    * index instead of n − 1 overlays. Edge- or corner-touching parts share
+    * an envelope point, stay in one component, and are dissolved as
+    * before. Like JTS overlay, this expects valid polygonal input.
+    *
+    * Any other input (points, lines, mixed collections, all-empty)
+    * takes `UnaryUnionOp.union` unchanged. */
   def unionAll(gs: java.util.Collection[Geometry]): Geometry =
     if (gs.isEmpty) factory.createGeometryCollection()
-    else UnaryUnionOp.union(gs)
+    else polygonParts(gs) match {
+      case Some(parts) if parts.nonEmpty => unionPolygonParts(parts)
+      case _ => UnaryUnionOp.union(gs)
+    }
+
+  /** The non-empty Polygon parts of all-polygonal input; None if any
+    * input is neither a Polygon nor a MultiPolygon. */
+  private def polygonParts(gs: java.util.Collection[Geometry]): Option[Array[Polygon]] = {
+    val parts = Array.newBuilder[Polygon]
+    val it = gs.iterator()
+    while (it.hasNext) it.next() match {
+      case p: Polygon => if (!p.isEmpty) parts += p
+      case mp: MultiPolygon =>
+        var i = 0
+        while (i < mp.getNumGeometries) {
+          val p = mp.getGeometryN(i).asInstanceOf[Polygon]
+          if (!p.isEmpty) parts += p
+          i += 1
+        }
+      case _ => return None
+    }
+    Some(parts.result())
+  }
+
+  private val envelopeOrder: Ordering[Polygon] = (a: Polygon, b: Polygon) => {
+    val (ea, eb) = (a.getEnvelopeInternal, b.getEnvelopeInternal)
+    var c = java.lang.Double.compare(ea.getMinX, eb.getMinX)
+    if (c == 0) c = java.lang.Double.compare(ea.getMinY, eb.getMinY)
+    if (c == 0) c = java.lang.Double.compare(ea.getMaxX, eb.getMaxX)
+    if (c == 0) c = java.lang.Double.compare(ea.getMaxY, eb.getMaxY)
+    c
+  }
+
+  private def unionPolygonParts(unsorted: Array[Polygon]): Geometry = {
+    // envelope order makes the output part order independent of input
+    // order, and puts equal-envelope parts next to each other
+    val parts = unsorted.sorted(envelopeOrder)
+    val n = parts.length
+    val root = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (root(r) != r) { root(r) = root(root(r)); r = root(r) }
+      r
+    }
+    val tree = new org.locationtech.jts.index.strtree.STRtree()
+    var i = 0
+    while (i < n) { tree.insert(parts(i).getEnvelopeInternal, Integer.valueOf(i)); i += 1 }
+    i = 0
+    while (i < n) {
+      // Envelope.intersects is closed: touching envelopes connect
+      val hits = tree.query(parts(i).getEnvelopeInternal)
+      var h = 0
+      while (h < hits.size) {
+        val (a, b) = (find(i), find(hits.get(h).asInstanceOf[Integer].intValue))
+        if (a != b) root(math.max(a, b)) = math.min(a, b)
+        h += 1
+      }
+      i += 1
+    }
+
+    // members of each component in envelope order, components in the
+    // order of their first member
+    val members = new java.util.LinkedHashMap[Int, java.util.ArrayList[Polygon]]()
+    i = 0
+    while (i < n) {
+      val m = members.computeIfAbsent(find(i), _ => new java.util.ArrayList[Polygon]())
+      // exact duplicates share an envelope, so they sit in the run of
+      // equal-envelope parts at the tail of m
+      var k = m.size - 1
+      var dup = false
+      while (!dup && k >= 0 && envelopeOrder.equiv(m.get(k), parts(i))) {
+        dup = m.get(k).equalsExact(parts(i))
+        k -= 1
+      }
+      if (!dup) m.add(parts(i))
+      i += 1
+    }
+
+    val out = new java.util.ArrayList[Polygon]()
+    members.values.forEach { m =>
+      if (m.size == 1) out.add(m.get(0))
+      else {
+        val u = UnaryUnionOp.union(m.asInstanceOf[java.util.Collection[Geometry]])
+        var k = 0
+        while (k < u.getNumGeometries) { out.add(u.getGeometryN(k).asInstanceOf[Polygon]); k += 1 }
+      }
+    }
+    if (out.size == 1) out.get(0)
+    else factory.createMultiPolygon(out.toArray(new Array[Polygon](0)))
+  }
 }

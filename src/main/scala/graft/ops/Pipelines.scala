@@ -94,41 +94,6 @@ object Pipelines {
       .select(col("region_id"), col("season_id"), col("land_type_id"), col("area"))
   }
 
-  /** Spatial-join rollup: parcels ⋈ regions ON st_intersects, written as a
-    * PLAIN DECLARATIVE JOIN — `join(broadcast(regions), st_intersects(…))`
-    * — and planned by graft.plans.SpatialJoinStrategy into the broadcast
-    * R-tree physical operator (PlanShapeSpec asserts the exec node; without
-    * the strategy this exact plan is BroadcastNestedLoopJoin, O(|L|·|R|)).
-    * On the fixture geometry every parcel intersects exactly its own
-    * region (regions are disjoint 50 km cells on a 60 km grid; parcels lie
-    * strictly inside), so the result is closed-form: the per-region
-    * fact-row count. */
-  /** The shared probe side of every spatial-join query: fact rows fanned
-    * out BEFORE the per-row envelope/WKB projection (geometry construction
-    * is the expensive kernel and must not run on the handful of scan
-    * tasks — see Par.fanOut), geometry built directly from numeric columns
-    * (st_makeenvelope — the probe side has no reason to round-trip WKT).
-    * `own_region` is the fixture's closed-form answer key, used by the
-    * semi rollup and oracle mirrors. */
-  private def parcelRelation(spark: SparkSession, dir: String): DataFrame = {
-    import GeoFixtures._
-    val li = Par.fanOut(spark.read.parquet(s"$dir/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey")))
-    val px0 = parcelX0(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))
-    val py0 = parcelY0(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))
-    li.select(
-      (col("l_partkey") % 25).cast("int").as("own_region"),
-      // integral origin coordinates ride along for consumers that compute
-      // exact rectangle arithmetic on the matches (e.g. the kNN rollup);
-      // Catalyst prunes them from every query that selects them away
-      px0.cast("long").as("px0"),
-      py0.cast("long").as("py0"),
-      st_makeenvelope(px0.cast("double"), py0.cast("double"),
-        (px0 + lit(GeoFixtures.ParcelSize)).cast("double"),
-        (py0 + lit(GeoFixtures.ParcelSize)).cast("double"))
-        .as("parcel_geom"))
-  }
-
   /** The broadcast dimension side: region polygons from WKT. */
   private def regionRelation(spark: SparkSession, dir: String): DataFrame = {
     import GeoFixtures._
@@ -218,7 +183,13 @@ object Pipelines {
       |    AS BIGINT) AS alloc_milli
       |FROM p GROUP BY zone_id ORDER BY zone_id""".stripMargin
 
-  /** Probe side deduped to distinct parcel SLOTS with a multiplicity
+  /** Spatial-join rollup: parcels ⋈ regions written as a plain
+    * `join(broadcast(regions), st_intersects(…))`, which
+    * graft.plans.SpatialJoinStrategy plans as the broadcast R-tree exec
+    * (PlanShapeSpec asserts the node). Every parcel intersects exactly its
+    * own region, so the result is the closed-form per-region row count.
+    *
+    * Probe side deduped to distinct parcel SLOTS with a multiplicity
     * weight (r18, the [[parcelSlotRelation]] kNN precedent extended to
     * the whole spatial-rollup family): duplicate probe rows of one slot
     * have an identical geometry, hence an identical match set, and the
@@ -415,7 +386,7 @@ object Pipelines {
     * doubles: exact integers), so the kernel sees the same geometry. */
   private def parcelSlotRelation(spark: SparkSession, dir: String): DataFrame = {
     import GeoFixtures._
-    // deliberately NOT parcelRelation: fanOut's round-robin repartition
+    // deliberately NOT Par.fanOut: its round-robin repartition
     // would spread each slot's duplicates across tasks and destroy
     // map-side partial aggregation (measured: 600k rows in → 518k
     // partials out); aggregating straight off the scan reduces to ≤

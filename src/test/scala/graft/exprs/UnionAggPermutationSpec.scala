@@ -32,6 +32,28 @@ class UnionAggPermutationSpec extends AnyFunSuite {
     assert(area == n.toDouble, s"expected $n disjoint unit squares, got $area")
   }
 
+  test("a 30×30 grid of edge-touching unit squares dissolves to one polygon") {
+    import spark.implicits._
+    // one envelope component: every square touches its neighbours, so the
+    // map-side compactions (300 rows a partition > CompactAt) and the
+    // reduce-side merge must all go through overlay and dissolve
+    val wkts = for (i <- 0 until 30; j <- 0 until 30) yield rectWkt(i, j, 1, 1)
+    val r = wkts.toDF("wkt").repartition(3)
+      .agg(st_union_agg(st_geomfromwkt(col("wkt"))).as("u"))
+      .select(st_numgeometries(col("u")), st_area(col("u")))
+      .head()
+    assert(r.getInt(0) == 1, s"expected one dissolved polygon, got ${r.getInt(0)} parts")
+    assert(r.getDouble(1) == 900.0)
+  }
+
+  test("50 copies of one square union to that square") {
+    import spark.implicits._
+    val area = Seq.fill(50)(rectWkt(7, 3, 1, 1)).toDF("wkt").repartition(3)
+      .agg(st_area(st_union_agg(st_geomfromwkt(col("wkt")))))
+      .head().getDouble(0)
+    assert(area == 1.0, s"duplicates must not add area, got $area")
+  }
+
   test("st_union_agg area is invariant under row order and partitioning") {
     import spark.implicits._
     val rng = new scala.util.Random(42)
