@@ -1392,7 +1392,6 @@ object TextQueries {
     * definitional row_number-window form on the same corpus. */
   def spanExcise(spark: SparkSession, dir: String, w: Int = 20,
                  stride: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Par.fanOut(documents(spark, dir))
       .withColumn("toks", expr("filter(split(text, ' '), x -> x != '')"))
       .select(col("doc_id"), col("source"), size(col("toks")).cast("long").as("n_toks"),

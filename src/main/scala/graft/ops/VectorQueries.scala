@@ -822,7 +822,7 @@ object VectorQueries {
     * doubles (1024 values). Training is ONE Spark job: the subspace axis
     * is an explode, never a per-subspace loop of jobs. */
   private def trainedPqBooks(spark: SparkSession, dir: String,
-                             m: Int = 8, ksub: Int = 16): Array[Array[Seq[Double]]] =
+                             m: Int, ksub: Int): Array[Array[Seq[Double]]] =
     pqCache.computeIfAbsent((spark, dir), _ => trainPqBooks(spark, dir, m, ksub))
 
   private def trainPqBooks(spark: SparkSession, dir: String,

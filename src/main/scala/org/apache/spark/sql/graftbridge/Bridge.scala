@@ -38,13 +38,9 @@ object Bridge {
 
   /** Spark's own wrong-argument-count analysis error, so SQL-text misuse of
     * a graft function fails like misuse of a builtin (named function, clear
-    * expected/actual counts) instead of an IndexOutOfBoundsException. */
-  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
-    org.apache.spark.sql.errors.QueryCompilationErrors
-      .wrongNumArgsError(name, Seq(expected), actual)
-
-  /** Variadic form for functions accepting several arities (e.g.
-    * `bloom_filter_agg(k)`, `(k, items)`, `(k, items, bits)`). */
+    * expected/actual counts) instead of an IndexOutOfBoundsException.
+    * `expected` lists every accepted count (e.g. 1 to 3 for
+    * `bloom_filter_agg(k [, items [, bits]])`). */
   def wrongNumArgs(name: String, expected: Seq[Int], actual: Int): Throwable =
     org.apache.spark.sql.errors.QueryCompilationErrors
       .wrongNumArgsError(name, expected, actual)
